@@ -1,0 +1,12 @@
+package org.apache.spark.perfbench
+
+import org.apache.spark.SparkContext
+
+/** Access to the listener bus, which Spark keeps package-private. */
+object Bus {
+
+  /** Block until every event posted so far has reached the listeners, so
+    * counters read at a span boundary include the span's own jobs.
+    */
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty(60000L)
+}
