@@ -2,12 +2,11 @@ package graft.io
 
 import java.nio.file.Files
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
+import graft.Memo
 import graft.functions.{HllEstimateExpr, HllMergeExpr, HllRegistersAgg}
 
 /** One aggregate of a materialized view's definition: `fn(in) AS out`.
@@ -952,12 +951,9 @@ object MatView {
     * aggregates from `orders` directly — a hash match proves
     * incremental == recompute end-to-end through the change window.
     */
-  private val mvCache = TrieMap.empty[(SparkSession, String),
-    (String, String, String, String, String, String)]
-
   private def landedMv(s: SparkSession, dir: String)
       : (String, String, String, String, String, String) =
-    mvCache.getOrElseUpdate((s, dir), {
+    Memo("matview.mv", Memo.Standing, s, dir) {
       val src = Files.createTempDirectory("graft_mv_src").toString
       val orders = Sources.table(s, dir, "orders")
         .select("o_orderkey", "o_orderstatus", "o_orderpriority",
@@ -1018,7 +1014,7 @@ object MatView {
       refresh(s, fl)
       refresh(s, jv) // dims unmoved: the fact-delta path through joins
       (src, mv, mm, nv, fl, jv)
-    })
+    }
 
   private def qMvIncremental(s: SparkSession, dir: String): DataFrame = {
     val (_, mv, _, _, _, _) = landedMv(s, dir)
@@ -1063,10 +1059,8 @@ object MatView {
   /** The same lifecycle driven ENTIRELY through SQL: CREATE
     * MATERIALIZED VIEW, source DML, REFRESH, and a `graft_mv` read.
     */
-  private val sqlCache = TrieMap.empty[(SparkSession, String), String]
-
   private def landedSqlMv(s: SparkSession, dir: String): String =
-    sqlCache.getOrElseUpdate((s, dir), {
+    Memo("matview.sql_mv", Memo.Standing, s, dir) {
       val src = Files.createTempDirectory("graft_mv_sqlsrc").toString
       val orders = Sources.table(s, dir, "orders")
         .select("o_orderkey", "o_orderstatus")
@@ -1080,17 +1074,15 @@ object MatView {
         statsCol = Some("o_orderkey"))
       s.sql(s"REFRESH MATERIALIZED VIEW '$mv'")
       mv
-    })
+    }
 
   private def qMvSql(s: SparkSession, dir: String): DataFrame = {
     val mv = landedSqlMv(s, dir)
     s.sql(s"SELECT * FROM graft_mv('$mv') ORDER BY o_orderstatus")
   }
 
-  private[graft] def clearMemos(): Unit = {
-    mvCache.keys.toList.foreach(mvCache.remove)
-    sqlCache.keys.toList.foreach(sqlCache.remove)
-  }
+  /** A one-line forwarder to [[graft.Memo.releaseAll]]. */
+  private[graft] def clearMemos(): Unit = Memo.releaseAll()
 
   val queries: Map[String, (SparkSession, String) => DataFrame] =
     Map("q_mv_incremental" -> qMvIncremental,

@@ -33,8 +33,13 @@ object Sources {
     *     TimestampType — the session runs UTC, so the wall-clock values
     *     match DuckDB's naive read exactly;
     *   - TIMESTAMP(MICROS, adjusted) → already TimestampType, pass through.
+    *
+    * Every read first revalidates `dir` with [[graft.Memo]]: memo frames
+    * built from an older content of `dir` would otherwise be served by
+    * Spark's path-matching CacheManager to this fresh plan.
     */
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    graft.Memo.revalidate(dir)
     if (name == "events") {
       // Resolve the schema WITHOUT the legacy flag first (round-12 ADVICE):
       // only a genuine TIMESTAMP(NANOS) file fails that resolution, so the
@@ -107,6 +112,7 @@ object Sources {
     } else {
       spark.read.parquet(s"$dir/$name.parquet")
     }
+  }
 
   /** CSV source (header + schema inference off by default at scale: pass an
     * explicit schema to avoid a full pre-scan of 100 TB of text).
@@ -176,20 +182,20 @@ object Sources {
       .orderBy("event_id")
   }
 
-  /** Content fingerprint of `<dir>/<name>.parquet`: md5 over the sorted
-    * (file name, size, mtime) walk, truncated to 12 hex chars. Keys every
-    * /tmp derived-layout cache (partitioned events, media fixtures) so a
-    * REGENERATED testdata dir can never silently reuse a stale copy while
-    * the oracle reads the live table (round-5 ADVICE).
+  /** Content fingerprint of the file or directory at `path`: md5 over the
+    * sorted (file name, size, mtime) walk, truncated to 12 hex chars. Keys
+    * every /tmp derived-layout cache (partitioned events, media fixtures)
+    * so a REGENERATED testdata dir can never silently reuse a stale copy
+    * while the oracle reads the live table (round-5 ADVICE), and every
+    * [[graft.Memo]] entry on the content of its input dir.
     */
-  private[graft] def fingerprint(dir: String, name: String): String = {
+  private[graft] def fingerprint(path: String): String = {
     def walk(f: java.io.File): Seq[String] =
       if (f.isDirectory)
         Option(f.listFiles()).toSeq.flatten.sortBy(_.getName).flatMap(walk)
       else Seq(s"${f.getName}:${f.length}:${f.lastModified}")
     java.security.MessageDigest.getInstance("MD5")
-      .digest(walk(new java.io.File(s"$dir/$name.parquet"))
-        .mkString("\n").getBytes("UTF-8"))
+      .digest(walk(new java.io.File(path)).mkString("\n").getBytes("UTF-8"))
       .map("%02x".format(_)).mkString.take(12)
   }
 
@@ -201,7 +207,7 @@ object Sources {
     */
   private[graft] def partitionedEventsPath(dir: String): String =
     "/tmp/graft_part_events_" + dir.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + fingerprint(dir, "events")
+      "_" + fingerprint(s"$dir/events.parquet")
 
   /** Hive-partitioned copy of `events` (partition column `event_date`),
     * written through [[Layout.writePartitioned]] on first use. This is the

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Memo
 import graft.io.Sources
 
 /** Composite multi-join analytic queries — the TPC-H-shaped workloads a
@@ -776,11 +777,8 @@ object Analytics {
     * physical plan. Planning is FORCED inside the conf window (plans
     * are lazy; restoring the conf first would optimize without CBO).
     */
-  private val cboCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Unit]
-
   private def landedCboTables(s: SparkSession, dir: String): Unit =
-    cboCache.getOrElseUpdate((s, dir), {
+    Memo("analytics.cbo_tables", Memo.Standing, s, dir) {
       def land(name: String, stats: Seq[String], ndv: Seq[String]): Unit = {
         val root = java.nio.file.Files
           .createTempDirectory(s"graft_cbo5_$name").toString + "/t"
@@ -800,7 +798,7 @@ object Analytics {
       land("lineitem", Seq("l_orderkey", "l_shipdate"),
         Seq("l_orderkey", "l_suppkey", "l_partkey"))
       land("part", Seq("p_partkey"), Seq("p_partkey"))
-    })
+    }
 
   /** Fixture doorway for [[graft.SparkEntry.prepare]] (r18 VERDICT
     * nit): landing the 7 format-backed CBO tables is one-time layout,

@@ -1,13 +1,12 @@
 package graft.ops
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
+import graft.Memo
 import graft.io.Sources
 
 /** Deduplication suite for the training-data pipeline tier: exact
@@ -205,44 +204,30 @@ object Dedup {
     * a few hundred bytes/doc, far smaller than the corpus text, so
     * MEMORY_AND_DISK is safe at any scale the corpus itself fits.
     */
-  private val bandCache = TrieMap.empty[(SparkSession, String), DataFrame]
-
   private[graft] def cachedBands(s: SparkSession, dir: String): DataFrame =
-    bandCache.getOrElseUpdate((s, dir),
+    Memo("dedup.bands", Memo.Pass, s, dir)(
       bandRows(signatures(s, dir)).persist(StorageLevel.MEMORY_AND_DISK))
 
-  /** Release every memoized band-row cache: unpersist the blocks and drop
-    * the session references. Lifecycle contract (round-3 ADVICE): the cache
-    * is keyed by (session, dir) and NEVER self-expires — results go stale
-    * if the data under `dir` is rewritten within one session, and the
-    * persisted blocks plus session references live until this is called.
-    * Call it when a batch of dedup queries over one corpus is done (the
-    * Verify/Bench mains do); long-lived sessions embedding this library
-    * must do the same.
+  /** Release the pass memos and pinned frames: a one-line forwarder to
+    * [[graft.Memo.releasePass]]. The band rows and every other dedup memo
+    * are keyed on the content of `dir`, so rewriting it inside a session
+    * rebuilds them without this call; it only ends their persisted
+    * lifetime.
     */
-  def clearCaches(): Unit = {
-    // blocking: this is the batch-lifecycle boundary, and a non-blocking
-    // release defers block deletion into whatever runs next (round-7 bench:
-    // the deferred churn inflated the head of the following pass 2-4×)
-    Seq(bandCache, repBandCache, dupPairCache, grpCache, embedBandCache,
-        gramCache, embedPairCache, candPairCache)
-      .foreach { cache =>
-      cache.keys.toList.foreach { k =>
-        cache.remove(k).foreach(_.unpersist(blocking = true))
-      }
+  def clearCaches(): Unit = Memo.releasePass()
+
+  /** (doc_id, rep) exact-dup group map — ONE corpus scan + one shuffle on
+    * the 16-byte md5 (never the text), persisted at 16 bytes/row and
+    * shared by [[repBands]] and [[dupPairs]] so neither re-reads the
+    * corpus.
+    */
+  private def exactGroups(s: SparkSession, dir: String): DataFrame =
+    Memo("dedup.exact_groups", Memo.Pass, s, dir) {
+      val w = Window.partitionBy(unhex(md5(col("text"))))
+      docs(s, dir)
+        .select(col("doc_id"), min(col("doc_id")).over(w).as("rep"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
     }
-    labelsCache.keys.toList.foreach { k =>
-      labelsCache.remove(k).foreach(_.unpersist(blocking = true))
-    }
-    // also release the per-call persisted frames other operators registered
-    // (surrogateKeysScaled, qWinNtileScaled — round-4 ADVICE) and drop the
-    // similarity memos so re-use after a release rebuilds cleanly
-    graft.Caches.releaseAll()
-    Similarity.clearMemos()
-    SimJoin.clearMemos()
-    Multimodal.clearMemos()
-    TextOps.clearMemos()
-  }
 
   /** Band rows of exact-dup group REPRESENTATIVES only (min doc_id per
     * md5(text)), lazily persisted like [[cachedBands]]. Pre-collapsing
@@ -254,25 +239,8 @@ object Dedup {
     * relation is re-attached linearly by [[dupPairs]] where cluster
     * semantics need it.
     */
-  private val repBandCache = TrieMap.empty[(SparkSession, String), DataFrame]
-  private val dupPairCache = TrieMap.empty[(SparkSession, String), DataFrame]
-  private val grpCache = TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** (doc_id, rep) exact-dup group map — ONE corpus scan + one shuffle on
-    * the 16-byte md5 (never the text), persisted at 16 bytes/row and
-    * shared by [[repBands]] and [[dupPairs]] so neither re-reads the
-    * corpus.
-    */
-  private def exactGroups(s: SparkSession, dir: String): DataFrame =
-    grpCache.getOrElseUpdate((s, dir), {
-      val w = Window.partitionBy(unhex(md5(col("text"))))
-      docs(s, dir)
-        .select(col("doc_id"), min(col("doc_id")).over(w).as("rep"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    })
-
   private[graft] def repBands(s: SparkSession, dir: String): DataFrame =
-    repBandCache.getOrElseUpdate((s, dir),
+    Memo("dedup.rep_bands", Memo.Pass, s, dir)(
       cachedBands(s, dir)
         .join(exactGroups(s, dir).filter(col("doc_id") === col("rep"))
           .select("doc_id"), Seq("doc_id"), "left_semi")
@@ -286,7 +254,7 @@ object Dedup {
     * with no byte-identical dups), never quadratic in group size.
     */
   private[graft] def dupPairs(s: SparkSession, dir: String): DataFrame =
-    dupPairCache.getOrElseUpdate((s, dir),
+    Memo("dedup.dup_pairs", Memo.Pass, s, dir)(
       exactGroups(s, dir)
         .filter(col("doc_id") =!= col("rep"))
         .join(cachedBands(s, dir).select("doc_id").distinct(),
@@ -343,12 +311,10 @@ object Dedup {
     * band rows — and `q_dedup_cc_incremental` evaluates the pair set
     * three times inside ONE query (old half, delta half, contraction).
     * The pair frame is two longs per candidate pair — persist-tiny at
-    * any corpus scale LSH is usable at. Released via [[clearCaches]].
+    * any corpus scale LSH is usable at.
     */
-  private val candPairCache = TrieMap.empty[(SparkSession, String), DataFrame]
-
   private def candidatePairs(s: SparkSession, dir: String): DataFrame =
-    candPairCache.getOrElseUpdate((s, dir),
+    Memo("dedup.cand_pairs", Memo.Pass, s, dir)(
       bucketPairs(repBands(s, dir)).persist(StorageLevel.MEMORY_AND_DISK))
 
   /** The full dup-graph pair set: rep-level LSH candidates plus the
@@ -661,12 +627,10 @@ object Dedup {
 
   /** Memoized converged component labels (doc_id, component_id) per
     * (session, dir) — shared by [[qDedupComponents]] and the leakage-safe
-    * split, released through [[clearCaches]] like the band rows.
+    * split, with the band rows' lifetime.
     */
-  private val labelsCache = TrieMap.empty[(SparkSession, String), DataFrame]
-
   private[graft] def componentLabels(s: SparkSession, dir: String): DataFrame =
-    labelsCache.getOrElseUpdate((s, dir), {
+    Memo("dedup.labels", Memo.Pass, s, dir) {
       // both edge directions via one explode — a union of two selects over
       // the pair pipeline would recompute the whole LSH join per branch
       val edges = componentPairs(s, dir)
@@ -688,7 +652,7 @@ object Dedup {
       edges.unpersist()
       labels.select(col("node").as("doc_id"), col("label").as("component_id"))
         .persist(StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   private def qDedupComponents(s: SparkSession, dir: String): DataFrame =
     componentLabels(s, dir).orderBy("doc_id")
@@ -944,12 +908,10 @@ object Dedup {
     * must be budgeted for it at scale, and on very large corpora
     * DISK_ONLY is the safer level (the consumers are one-pass
     * aggregations, so re-reading from local disk beats evicting
-    * execution memory). Released via [[clearCaches]].
+    * execution memory).
     */
-  private val gramCache = TrieMap.empty[(SparkSession, String), DataFrame]
-
   private def kgramRows(s: SparkSession, dir: String): DataFrame =
-    gramCache.getOrElseUpdate((s, dir), {
+    Memo("dedup.kgrams", Memo.Pass, s, dir) {
       val ws = col("ws")
       val idx = when(size(ws) >= SubstringK,
         sequence(lit(1), size(ws) - (SubstringK - 1)))
@@ -960,7 +922,7 @@ object Dedup {
           i => unhex(md5(concat_ws(" ", slice(ws, i, lit(SubstringK))))))))
         .select(col("doc_id"), (col("pos") + 1).as("pos"), col("col").as("g"))
         .persist(StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   private def qDedupSubstring(s: SparkSession, dir: String): DataFrame = {
     val grams = kgramRows(s, dir).select("doc_id", "g")
@@ -1075,12 +1037,10 @@ object Dedup {
     * projection LSH, Charikar's SimHash for vectors), banded 4 × 8 bits.
     * Persisted + memoized like the MinHash band rows ([[cachedBands]]):
     * the LSH self-join would otherwise evaluate the 32 dot products twice
-    * per vector. Released by [[clearCaches]].
+    * per vector.
     */
-  private val embedBandCache = TrieMap.empty[(SparkSession, String), DataFrame]
-
   private def cachedEmbedBands(s: SparkSession, dir: String): DataFrame =
-    embedBandCache.getOrElseUpdate((s, dir), {
+    Memo("dedup.embed_bands", Memo.Pass, s, dir) {
       val bits = HyperPlanes.map { h =>
         val plane = array(h.toIndexedSeq.map(v => lit(v)): _*)
         when(Similarity.dot(col("embedding"), plane) >= 0, "1").otherwise("0")
@@ -1092,7 +1052,7 @@ object Dedup {
             substring(col("s"), b * 8 + 1, 8).as("bkey"))): _*)).as("b"))
         .select(col("vec_id"), col("b.band_id"), col("b.bkey"))
         .persist(StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   /** Embedding near-dup at scale: candidates from the band-bucket
     * equi-join (shuffle key = band bucket, never all-pairs), exact cosine
@@ -1114,13 +1074,10 @@ object Dedup {
     * band self-join + two embedding joins + cosine verification once for
     * `q_dedup_embed_components` and AGAIN for `q_dedup_embed_lsh`; the
     * verified pair set is pair-sized (two longs + a double per pair) and
-    * the build is owned by `_components` in sorted bench order. Released
-    * via [[clearCaches]].
+    * the build is owned by `_components` in sorted bench order.
     */
-  private val embedPairCache = TrieMap.empty[(SparkSession, String), DataFrame]
-
   private def embedVerifiedPairs(s: SparkSession, dir: String): DataFrame =
-    embedPairCache.getOrElseUpdate((s, dir),
+    Memo("dedup.embed_pairs", Memo.Pass, s, dir)(
       buildEmbedVerifiedPairs(s, dir).persist(StorageLevel.MEMORY_AND_DISK))
 
   private def buildEmbedVerifiedPairs(s: SparkSession, dir: String): DataFrame = {

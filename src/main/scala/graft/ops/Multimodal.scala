@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Memo
 import graft.io.Sources
 
 /** Multimodal-column pipeline: media payloads ride through the engine as
@@ -376,7 +377,7 @@ object Multimodal {
     */
   private def fixturePath(dir: String, kind: String): String =
     s"/tmp/graft_mm_${kind}_" + dir.replaceAll("[^A-Za-z0-9]", "_") +
-      "_" + Sources.fingerprint(dir, "documents")
+      "_" + Sources.fingerprint(s"$dir/documents.parquet")
 
   private def materialized(s: SparkSession, dir: String, kind: String,
                            build: => DataFrame): DataFrame = {
@@ -516,16 +517,9 @@ object Multimodal {
     * Hamming verification would otherwise re-run the PNG decode once per
     * consuming branch. The frame is (long, 64-char string) per image —
     * hundreds of bytes/doc, safe to persist at any scale the corpus fits.
-    * Registered in [[graft.Caches]] (released by `Dedup.clearCaches()`);
-    * [[clearMemos]] drops the memo so a released session rebuilds cleanly.
     */
-  private val hashCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
-  private[graft] def clearMemos(): Unit = hashCache.clear()
-
   private def aHashSigs(s: SparkSession, dir: String): DataFrame =
-    hashCache.getOrElseUpdate((s, dir), {
+    Memo("multimodal.ahash", Memo.Pass, s, dir) {
       import s.implicits._
       // ONE decode per image, both hashes emitted from it. The semantic
       // contract is hash(decode(resizePng(bytes, 16))) — but PNG grayscale
@@ -536,20 +530,19 @@ object Multimodal {
       // 5000 PNGs per pass — 5.8 s at sf0.1). The byte-level resize path
       // stays exercised by q_mm_resize, and the oracle pins this plan to
       // the same values the byte path produces.
-      graft.Caches.register(
-        blockPngFixture(s, dir).as[(Long, Array[Byte])]
-          .mapPartitions(it => it.flatMap { case (id, b) =>
-            val img = javax.imageio.ImageIO.read(
-              new java.io.ByteArrayInputStream(b))
-            require(img != null, s"undecodable payload for img $id")
-            Iterator(
-              (id, ImageCodec.aHash(img)),
-              (id + ResizeIdOffset,
-                ImageCodec.aHash(ImageCodec.downscale(img, 16))))
-          })
-          .toDF("img_id", "ahash")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    })
+      blockPngFixture(s, dir).as[(Long, Array[Byte])]
+        .mapPartitions(it => it.flatMap { case (id, b) =>
+          val img = javax.imageio.ImageIO.read(
+            new java.io.ByteArrayInputStream(b))
+          require(img != null, s"undecodable payload for img $id")
+          Iterator(
+            (id, ImageCodec.aHash(img)),
+            (id + ResizeIdOffset,
+              ImageCodec.aHash(ImageCodec.downscale(img, 16))))
+        })
+        .toDF("img_id", "ahash")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
 
   /** Image near-dup dedup via perceptual hash (round-8/9 VERDICT task 2):
     * the variant corpus is every document's block-mosaic PNG

@@ -636,10 +636,9 @@ object Relational {
     */
   private def qWinNtileScaled(s: SparkSession, dir: String): DataFrame = {
     val ord = Seq(col("c_acctbal").desc, col("c_custkey").asc)
-    // registered in graft.Caches → released by Dedup.clearCaches()
-    // (round-4 ADVICE: repeated calls in a long session must not
-    // accumulate cached blocks)
-    val parted = graft.Caches.register(
+    // pinned, so the pass release frees it (round-4 ADVICE: repeated
+    // calls in a long session must not accumulate cached blocks)
+    val parted = graft.Memo.pin(
       t(s, dir, "customer")
         .select("c_custkey", "c_acctbal")
         .repartitionByRange(ord: _*)
@@ -865,12 +864,12 @@ object Relational {
     // this scale, but the persist PINS the single-scan shape at 100 TB
     // instead of leaving it to a runtime heuristic (round-14 VERDICT
     // plan-audit note). Minute-grained counts are tiny relative to the
-    // events they summarize; the bench's inter-pass release unpersists.
-    val counts = t(s, dir, "events")
+    // events they summarize; pinned, so the pass release unpersists it.
+    val counts = graft.Memo.pin(t(s, dir, "events")
       .select((floor(unix_timestamp(col("ts")) / 60) * 60)
         .cast(LongType).as("m"))
       .groupBy("m").agg(count(lit(1)).as("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val mu = col("s1").cast(DoubleType) / col("k")
     val stats = counts
       .agg(count(lit(1)).as("k"), sum(col("n")).as("s1"),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Memo
 import graft.io.Sources
 
 /** Similarity search over the embedding corpus: brute-force cosine top-k
@@ -405,45 +406,27 @@ object Similarity {
     * DuckDB oracle reproduces the full 2-step training and the search
     * exactly.
     */
-  /** Memoized featurized corpus and trained codebook, keyed by sf dir —
-    * the trained-IVF queries (nprobe=1 and nprobe=2) share one training
-    * run the way a real index serves many searches. The corpus persist is
-    * registered in [[graft.Caches]] (released by `Dedup.clearCaches()`);
-    * after a release the memoized plans remain correct, merely uncached,
-    * and [[clearMemos]] (also called from `clearCaches`) drops them so a
-    * long-lived session can rebuild cleanly.
+  /** Memoized featurized corpus and trained codebook — the trained-IVF
+    * queries (nprobe=1 and nprobe=2) share one training run the way a
+    * real index serves many searches.
     */
-  private val corpusCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val codebookCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private[graft] def clearMemos(): Unit = {
-    corpusCache.clear()
-    codebookCache.clear()
-    assignCache.clear()
-  }
-
-  // memos key on (session, dir) like Dedup.labelsCache: a second session
-  // sharing the dir must not receive frames bound to the first (possibly
-  // stopped) session (round-5 ADVICE)
   private[graft] def featurizedCorpus(s: SparkSession, dir: String): DataFrame =
-    corpusCache.getOrElseUpdate((s, dir), graft.Caches.register(
+    Memo("similarity.corpus", Memo.Pass, s, dir)(
       emb(s, dir)
         .select(col("vec_id"), col("embedding"),
           dot(col("embedding"), col("embedding")).as("nrm2"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   /** The 2-step-Lloyd codebook with per-centroid ||c||², ready to
     * broadcast. Persisted (k × dim — tiny) so the second consumer skips
     * re-training.
     */
   private def trainedCodebook(s: SparkSession, dir: String): DataFrame =
-    codebookCache.getOrElseUpdate((s, dir), graft.Caches.register(
+    Memo("similarity.codebook", Memo.Pass, s, dir)(
       lloydCentroids(featurizedCorpus(s, dir), 16, 2)
         .select(col("cid"), col("cemb"),
           dot(col("cemb"), col("cemb")).as("cnrm2"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   /** Nearest-centroid assignment of featurized `(vec_id, embedding,
     * nrm2)` rows to a FROZEN codebook — shared by the full-corpus
@@ -484,16 +467,12 @@ object Similarity {
     * frame carries the full embedding plus norms per row (the searches
     * score against it), so the persist is roughly a second copy of
     * [[featurizedCorpus]]'s cached vectors — budget both when sizing
-    * executor storage memory at scale; released via
-    * [[clearMemos]]/Caches like every other memo.
+    * executor storage memory at scale.
     */
-  private val assignCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private def trainedAssignment(s: SparkSession, dir: String): DataFrame =
-    assignCache.getOrElseUpdate((s, dir), graft.Caches.register(
+    Memo("similarity.assign", Memo.Pass, s, dir)(
       assignFeaturized(featurizedCorpus(s, dir), trainedCodebook(s, dir))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   /** Landed IVF index per (session, dir) — write-once like the postings
     * artifact. `cells/` holds every assigned vector (embedding, ||v||,
@@ -504,41 +483,36 @@ object Similarity {
     * partition pruning against the (broadcast) probed-query frame, so
     * 14/16ths of the index is never listed, let alone read.
     */
-  private val ivfIndexCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-
   private[graft] def ivfIndexRoot(s: SparkSession, dir: String): String =
-    ivfIndexCache.synchronized {
-      ivfIndexCache.getOrElseUpdate((s, dir), {
-        val root = java.nio.file.Files
-          .createTempDirectory("graft_ivf").toString
-        // the inverted lists carry the vectors' ATTRIBUTE columns
-        // (label) alongside the embeddings: filtered ANN — the most
-        // common production vector-search shape (`lang = 'en' AND
-        // cosine top-k`) — needs the predicate evaluable INSIDE the
-        // probed cells' scan, not via a corpus-wide attribute join at
-        // query time (round-14 VERDICT #6)
-        trainedAssignment(s, dir)
-          .join(emb(s, dir).select(col("vec_id"), col("label")), "vec_id")
-          .write.partitionBy("cell").parquet(root + "/cells")
-        trainedCodebook(s, dir).write.parquet(root + "/cents")
-        // the PQ half of the at-rest index: per-(vector, subspace) codes
-        // tagged with their IVF cell and partitioned the same way, plus
-        // the 16-row per-subspace codebook sidecar — what each inverted
-        // list STORES at 100 TB (4 small ints per vector, not floats)
-        val sub = pqSubvectors(emb(s, dir))
-        val cb = pqCodebook(sub)
-        // tag codes with cells from the MEMOIZED assignment frame (just
-        // written above) — re-reading cells/ would pay a directory
-        // listing + scan for data already persisted in memory
-        pqCodes(sub, cb)
-          .join(trainedAssignment(s, dir).select(col("vec_id"), col("cell")),
-            "vec_id")
-          .repartition(col("cell"))
-          .write.partitionBy("cell").parquet(root + "/codes")
-        cb.write.parquet(root + "/pqcb")
-        root
-      })
+    Memo("similarity.ivf_index", Memo.Standing, s, dir) {
+      val root = java.nio.file.Files
+        .createTempDirectory("graft_ivf").toString
+      // the inverted lists carry the vectors' ATTRIBUTE columns
+      // (label) alongside the embeddings: filtered ANN — the most
+      // common production vector-search shape (`lang = 'en' AND
+      // cosine top-k`) — needs the predicate evaluable INSIDE the
+      // probed cells' scan, not via a corpus-wide attribute join at
+      // query time (round-14 VERDICT #6)
+      trainedAssignment(s, dir)
+        .join(emb(s, dir).select(col("vec_id"), col("label")), "vec_id")
+        .write.partitionBy("cell").parquet(root + "/cells")
+      trainedCodebook(s, dir).write.parquet(root + "/cents")
+      // the PQ half of the at-rest index: per-(vector, subspace) codes
+      // tagged with their IVF cell and partitioned the same way, plus
+      // the 16-row per-subspace codebook sidecar — what each inverted
+      // list STORES at 100 TB (4 small ints per vector, not floats)
+      val sub = pqSubvectors(emb(s, dir))
+      val cb = pqCodebook(sub)
+      // tag codes with cells from the MEMOIZED assignment frame (just
+      // written above) — re-reading cells/ would pay a directory
+      // listing + scan for data already persisted in memory
+      pqCodes(sub, cb)
+        .join(trainedAssignment(s, dir).select(col("vec_id"), col("cell")),
+          "vec_id")
+        .repartition(col("cell"))
+        .write.partitionBy("cell").parquet(root + "/codes")
+      cb.write.parquet(root + "/pqcb")
+      root
     }
 
   /** Multi-probe IVF search over the AT-REST index — the same semantics
@@ -671,31 +645,23 @@ object Similarity {
     // index + the predicate — memoized like the index artifacts
     // themselves, so steady-state searches skip the check entirely
     // (re-probing an unchanged index per query would be statistics
-    // re-collection, not adaptivity)
-    val np = npCache.getOrElseUpdate((s, dir, nprobe, k, pred.toString), {
+    // re-collection, not adaptivity); keyed per start width, k and
+    // predicate
+    val np = Memo("similarity.nprobe", Memo.Standing, s, dir, nprobe, k,
+        pred.toString) {
       var w = math.min(nprobe, IvfNumCells)
       while (w < IvfNumCells && !filled(w))
         w = math.min(w * 2, IvfNumCells)
       w
-    })
+    }
     (search(np), np)
   }
-
-  /** Settled adaptive probe widths per (session, corpus, start width,
-    * k, predicate) — the fixture/index is immutable within a session,
-    * so the escalation decision is too.
-    */
-  private val npCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int, Int, String), Int]
 
   /** Query-set size per (session, corpus) — one count, shared by every
     * adaptive search's under-fill check.
     */
-  private val nQueriesCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Long]
-
   private def nQueriesOf(s: SparkSession, dir: String): Long =
-    nQueriesCache.getOrElseUpdate((s, dir),
+    Memo("similarity.n_queries", Memo.Standing, s, dir)(
       s.read.parquet(ivfIndexRoot(s, dir) + "/cells")
         .filter(col("vec_id") < 50).select("vec_id").distinct().count())
 

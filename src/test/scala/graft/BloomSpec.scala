@@ -67,7 +67,7 @@ class BloomSpec extends TestSpark {
     // the lean form, this pins the gated one against it
     val lean = graft.SparkEntry.queries("q_corpus_pipeline")(spark, Sf)
       .collect().map(_.toSeq).toSet
-    graft.ops.Dedup.clearCaches()
+    graft.Memo.releasePass()
     spark.conf.set(Bloom.ThresholdKey, "0")
     try {
       val scale = graft.SparkEntry.queries("q_corpus_pipeline")(spark, Sf)
@@ -76,7 +76,7 @@ class BloomSpec extends TestSpark {
         s"bloom-pruned pipeline diverged: ${(scale diff lean).take(3)} / ${(lean diff scale).take(3)}")
     } finally {
       spark.conf.unset(Bloom.ThresholdKey)
-      graft.ops.Dedup.clearCaches()
+      graft.Memo.releasePass()
     }
   }
 

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
   */
 class DedupSpec extends TestSpark {
 
+  import DedupSpec._
   import spark.implicits._
 
   test("exact dedup is idempotent and maps dups to min doc_id") {
@@ -460,19 +461,62 @@ class DedupSpec extends TestSpark {
   }
 
   test("clearCaches releases the band-row blocks (no executor-memory leak)") {
-    graft.ops.Dedup.clearCaches()
+    import graft.Memo
+    Memo.releaseAll()
+    spark.catalog.clearCache()
     val before = spark.sparkContext.getPersistentRDDs.keySet
     // materialize the memoized band cache
     graft.SparkEntry.queries("q_dedup_minhash")(spark, Sf).count()
     val during = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(during.nonEmpty, "expected the band rows to be persisted")
-    graft.ops.Dedup.clearCaches()
+    Memo.releasePass()
     val after = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(after.isEmpty,
-      s"band cache blocks still registered after clearCaches: $after")
+      s"band cache blocks still registered after releasePass: $after")
     // and the cache rebuilds cleanly after a clear
     assert(graft.SparkEntry.queries("q_dedup_minhash")(spark, Sf).count() > 0)
-    graft.ops.Dedup.clearCaches()
+
+    // The release contract over every memo site: one pass over the whole
+    // registry, as Bench runs it, builds every site.
+    def built(life: Memo.Lifetime): Map[String, Any] =
+      Memo.entries.collect { case (site, Sf, `life`, v) => site -> v }.toMap
+    def runPass(): Unit =
+      graft.SparkEntry.queries.values.foreach(q => q(spark, Sf).count())
+    runPass()
+    val pass = built(Memo.Pass)
+    val standing = built(Memo.Standing)
+    assert(pass.keySet === PassSites)
+    assert(standing.keySet === StandingSites)
+    // Bench's settle(): pass memos go, standing memos keep their values
+    Memo.releasePass()
+    assert(built(Memo.Pass).isEmpty)
+    assert(built(Memo.Standing) === standing)
+    // so the next pass's first consumers rebuild every pass memo and
+    // reuse every standing one
+    runPass()
+    val rebuilt = built(Memo.Pass)
+    assert(rebuilt.keySet === PassSites)
+    PassSites.foreach(k => assert(!(rebuilt(k).asInstanceOf[AnyRef] eq
+      pass(k).asInstanceOf[AnyRef]), s"$k was not rebuilt"))
+    assert(built(Memo.Standing) === standing)
+    // the table-format forwarder releases everything, the fixtures the
+    // old per-module clear missed included, and uncaches every frame a
+    // memo entry or a pin owned
+    def frames(v: Any): Seq[org.apache.spark.sql.Dataset[_]] = v match {
+      case d: org.apache.spark.sql.Dataset[_] => Seq(d)
+      case p: Product => p.productIterator.toSeq.flatMap(frames)
+      case _ => Nil
+    }
+    val owned = Memo.entries.flatMap(e => frames(e._4)) ++ Memo.pinned
+    val none = org.apache.spark.storage.StorageLevel.NONE
+    // every pass site but the shard path (a string) and the BPE state
+    // (checkpointed, not cached) holds a cached frame before the release
+    assert(owned.count(_.storageLevel != none) >= PassSites.size - 2)
+    graft.io.TableFormat.clearMemos()
+    assert(Memo.entries.isEmpty)
+    assert(Memo.pinned.isEmpty)
+    assert(owned.forall(_.storageLevel == none),
+      "memo or pinned frames still cached after releaseAll")
   }
 
   test("mega-dup cluster: exact-dup pre-collapse keeps LSH pairs linear") {
@@ -513,7 +557,7 @@ class DedupSpec extends TestSpark {
       else Option(t.getMessage).toSeq ++ messages(t.getCause)
     assert(messages(e).exists(_.contains("band bucket exceeds")),
       s"expected the cap's message in: ${messages(e).mkString(" | ")}")
-    graft.ops.Dedup.clearCaches()
+    graft.Memo.releasePass()
   }
 
   test("banding s-curve: P[candidate] rises with Jaccard; (b,r) sets the threshold") {
@@ -628,4 +672,30 @@ class DedupSpec extends TestSpark {
     assert(got.exists(r =>
       r.getLong(r.fieldIndex("n_kept")) < r.getLong(r.fieldIndex("n_units"))))
   }
+}
+
+object DedupSpec {
+
+  /** Memo sites released at every Bench/Verify pass boundary. */
+  val PassSites: Set[String] = Set(
+    "dedup.bands", "dedup.exact_groups", "dedup.rep_bands",
+    "dedup.dup_pairs", "dedup.cand_pairs", "dedup.labels", "dedup.kgrams",
+    "dedup.embed_bands", "dedup.embed_pairs",
+    "similarity.corpus", "similarity.codebook", "similarity.assign",
+    "simjoin.sets", "multimodal.ahash",
+    "textops.token_rows", "textops.bigram_rows", "textops.survivors",
+    "textops.shuffle_shards", "textops.bpe")
+
+  /** Memo sites that outlive a pass: landed fixture paths and settled
+    * scalars.
+    */
+  val StandingSites: Set[String] = Set(
+    "table.snapshot", "table.range", "table.merge", "table.evolution",
+    "table.dv", "table.dml", "table.dml2", "table.anti",
+    "table.scalar_update", "table.composed", "table.widen",
+    "table.merge_sql", "table.merge_cond", "table.merge_scalar",
+    "table.merge_src", "table.merge_evol", "table.merge_multi",
+    "table.rename", "textops.postings", "similarity.ivf_index",
+    "similarity.nprobe", "similarity.n_queries", "matview.mv",
+    "matview.sql_mv", "indexsync.cdc_index", "analytics.cbo_tables")
 }

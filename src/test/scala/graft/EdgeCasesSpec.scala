@@ -26,7 +26,7 @@ class EdgeCasesSpec extends TestSpark {
   private def land(dir: String, rows: Seq[(Long, String)]): Unit = {
     rows.toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    graft.ops.Dedup.clearCaches()
+    graft.Memo.releasePass()
   }
 
   test("an EMPTY documents table yields empty results, never a crash") {
@@ -36,7 +36,7 @@ class EdgeCasesSpec extends TestSpark {
       val n = SparkEntry.queries(k)(spark, dir).count()
       assert(n === 0, s"$k returned $n rows on an empty corpus")
     }
-    graft.ops.Dedup.clearCaches()
+    graft.Memo.releasePass()
   }
 
   test("sub-shingle and whitespace-only docs flow through the shingle tier") {
@@ -47,7 +47,7 @@ class EdgeCasesSpec extends TestSpark {
     assert(SparkEntry.queries("q_dedup_minhash")(spark, dir).count() === 0)
     // non-shingle ops still see the docs
     assert(SparkEntry.queries("q_pack_sequences")(spark, dir).count() === 4)
-    graft.ops.Dedup.clearCaches()
+    graft.Memo.releasePass()
   }
 
   test("null and unicode text rows survive the token pipelines") {
@@ -63,7 +63,7 @@ class EdgeCasesSpec extends TestSpark {
           org.apache.spark.sql.types.StructField("text",
             org.apache.spark.sql.types.StringType, nullable = true))))
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    graft.ops.Dedup.clearCaches()
+    graft.Memo.releasePass()
     // postings count the unicode tokens; the null row contributes none
     val postings = SparkEntry.queries("q_text_postings")(spark, dir)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -74,6 +74,6 @@ class EdgeCasesSpec extends TestSpark {
     // exact — identical-prefix docs must not collide across scripts
     val sim = SparkEntry.queries("q_simjoin_prefix")(spark, dir).count()
     assert(sim === 0, "cross-script docs share no shingles")
-    graft.ops.Dedup.clearCaches()
+    graft.Memo.releasePass()
   }
 }

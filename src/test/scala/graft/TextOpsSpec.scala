@@ -38,7 +38,7 @@ class TextOpsSpec extends TestSpark {
     assert(enc(2L)._1 === 2L) // two words
     assert(enc(2L)._2 <= 3L,  // at most [ababab-as-one-or-two, ab]
       s"encode under-merged: ${enc(2L)}")
-    graft.ops.Dedup.clearCaches() // drop the micro-corpus BPE memo
+    graft.Memo.releasePass() // drop the micro-corpus BPE memo
   }
 
   test("corpus shuffle is a reproducible permutation that breaks id order") {
